@@ -27,12 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join_both
-from ..operators.bucketed_window import (
-    BUCKET_SECS,
-    bucketed_auto,
-    bucketed_lag,
-    overlap_buckets,
-)
+from ..operators.bucketed_window import bucketed_auto, bucketed_lag
 from . import physics
 
 # payload columns compared by the duplicate detector. The reference
@@ -92,184 +87,25 @@ LEVEL1_FIELDS = RAW_PAYLOAD[:-1]  # sans flag (recomputed)
 # precedent (corpus-scaled physical shape, fixed semantics).
 LEVEL1_DUPW_HASH: bool | None = None
 
-# Round-10 scale shape (VERDICT r9 task 2): the per-site sequence
-# windows — level1's lag(count) over partitionBy(site_no) and
-# level4's ±3h range frame — are 8-task sorts whose per-task volume
-# grows linearly with per-site history (19.3 GiB mem + 5.5 GiB disk
-# of sort spill in the level1 prefix at x1000, LEVEL4_STAGES.json; no
+# Round-10 scale shape (VERDICT r9 task 2): level1's lag(count) over
+# partitionBy(site_no) is an 8-task sort whose per-task volume grows
+# linearly with per-site history (19.3 GiB mem + 5.5 GiB disk of sort
+# spill in the level1 prefix at x1000, LEVEL4_STAGES.json; no
 # partition count splits a sort keyed on 8 values). The bucketed
-# variants (operators/bucketed_window.py) compute the identical rows
+# variant (operators/bucketed_window.py) computes the identical rows
 # through balanced (site, week-bucket) groups plus a tiny boundary
 # exchange. None = auto: engage when the frame's own input-file bytes
 # say the corpus has outgrown the key count (>= 512 MiB — x1000
 # engages, sf0.1/x100 keep the fused single-window plan at small
-# scale; round 11 moved the basis off the session-global
-# shuffle-partition proxy, see bucketed_window.bucketed_auto).
-# Identity pinned variant-vs-variant by tests/test_bucketed_window.py.
-#
-# ADJUDICATED round 10 (tools/level_bucketed_ab.py, interleaved
-# noop-forced, 2 repeats):
-# - LEVEL1_SEQ_BUCKETED: ADOPTED (auto). LEVEL_BUCKETED_AB.json at
-#   x1000: level1 prefix 67.6 s -> 21.5 s (3.14x) with the sort spill
-#   RETIRED (18.0 GiB mem + 5.1 GiB disk -> zero); 1.14x even at
-#   x100; full level4 171.7 s -> 137.3 s (1.25x) riding on it.
-# - LEVEL4_FRAME_BUCKETED: MEASURED OUT (default False). With the
-#   seq win held fixed, the ±3h halo shape LOSES at x1000
-#   (LEVEL_FRAME_AB.json: plain frame 124.6 s vs halo 181.0 s,
-#   identical spill columns): level3's input to the frame is 5
-#   narrow columns, so the 8-task range sort is cheap, while the
-#   halo pays an explode + a second full hash shuffle of the same
-#   rows. The hook stays for a wider-row / denser-cadence deployment
-#   where the per-site frame sort would spill.
+# scale; see bucketed_window.bucketed_auto). Identity pinned by
+# tests/test_bucketed_window.py. ADOPTED round 10
+# (LEVEL_BUCKETED_AB.json at x1000: level1 prefix 67.6 s -> 21.5 s
+# with the sort spill retired; 1.14x even at x100). The same halo
+# shape for level4's ±3h frame lost (LEVEL_FRAME_AB.json).
 LEVEL1_SEQ_BUCKETED: bool | None = None
-LEVEL4_FRAME_BUCKETED: bool | None = False
 
-# Round-12 second-session lever: level1 is the level pipeline's
-# largest single x1000 stage (82.6 s prefix, LEVEL4_STAGES.json) and
-# pays TWO full wide-fact shuffles — the (site, week) sequence-lag
-# exchange and the (payload-hash, site) duplicate-window exchange.
-# The FUSED SCAN collapses them to one wide shuffle + a small one:
-#
-#   pass 1 (one (site, week-bucket) exchange): prev_count via the
-#   bucketed_lag logic inlined, PLUS a ±29-min same-hash CANDIDATE
-#   screen — occurrences of xxhash64(site, payload) in a ±1740 s
-#   range frame (bucket-edge rows additionally probe the adjacent
-#   buckets' 29-min tail/head hash SETS, one tiny aggregate row per
-#   (site, week), broadcast back like the lag boundary).
-#   pass 2 (exact confirm): the ORIGINAL hash-prefixed duplicate
-#   window runs verbatim on the candidate subset only.
-#
-# Exactness: the screen is a SUPERSET of every row that shares
-# (site, payload) with another row ≤29 min away (hash equality is
-# implied by payload equality; edge sets and non-empty-bucket
-# chaining only over-include). Restricting the original dup logic to
-# any superset S that is closed over ≤29-min same-payload neighbors
-# yields identical drops: a row's immediate same-payload predecessor
-# is in S whenever it is ≤29 min away (both flagged by the screen),
-# so the in-subset lag sees the same neighbor; when it is >29 min
-# away, any farther in-subset predecessor is older still and the row
-# stays kept either way. Rows outside S are kept, as the full window
-# would keep them. Hash collisions only enlarge S; the confirm pass
-# compares full payloads (null-safe struct equality), so drops are
-# exact, never probabilistic.
-#
-# At the domain's data shape ~2/7 of rows are candidates (the
-# injected duplicates and their sources), so the second wide exchange
-# shrinks ~3.5x; on corpora with realistic (rare) duplication it
-# approaches zero. Identity pinned by tests/test_level1_dup_subset.py.
-#
-# MEASURED OUT round 12 (LEVEL1_DUPSUBSET_AB.json, interleaved x1000,
-# 3 repeats): steady-state level1 prefix reads 40.6/45.8 s (twowin)
-# vs 97.6/194.9 s (subset) — the byte saving is real but the
-# cand/rest filter-union split makes Spark evaluate the expensive
-# pass-1 window subtree TWICE (one per branch; AQE reuses the
-# exchange but not the window evaluation above it), and the ±29-min
-# collect_list screen frames are interpreted per row. Avoiding the
-# double-eval requires either materializing the full wide fact
-# (persist at 100 TB scale) or folding exact payload comparison into
-# the frame buffer (per-row wide-struct collection, plus a
-# nondeterministic tiebreak to reproduce the oracle-pinned
-# equal-time lag semantics) — both trade a ~5 GiB shuffle saving for
-# costs the A/B says exceed it. The hook stays for a deployment with
-# near-zero duplicate rates AND a cheap materialization layer; the
-# shipped shape remains LEVEL1_SEQ_BUCKETED + LEVEL1_DUPW_HASH.
-LEVEL1_DUP_SUBSET: bool | None = False
-
-_DUP_WINDOW_SECS = 29 * 60
-
-
-def _level1_fused_scan(raw: DataFrame) -> DataFrame:
-    """raw + prev_count + is_duplicate through one (site, week-bucket)
-    exchange and a candidate-subset confirm — see LEVEL1_DUP_SUBSET.
-    Reference semantics unchanged (cosmoz_process_levels.py:340-429)."""
-    R = _DUP_WINDOW_SECS
-    secs = F.col("time").cast("long")
-    with_b = raw.withColumn(
-        "__bkt", F.floor(secs / F.lit(BUCKET_SECS)).cast("long")
-    ).withColumn("__hh", F.xxhash64("site_no", *RAW_PAYLOAD))
-
-    w_in = Window.partitionBy("site_no", "__bkt").orderBy("time")
-    w_rng = (
-        Window.partitionBy("site_no", "__bkt")
-        .orderBy(secs)
-        .rangeBetween(-R, R)
-    )
-    # occurrences of my hash within ±29 min (incl. self and all
-    # equal-time peers — range frames include every order-value tie,
-    # which keeps the screen a superset at ties)
-    near = F.size(
-        F.filter(
-            F.collect_list("__hh").over(w_rng), lambda x: x == F.col("__hh")
-        )
-    )
-
-    bstart = F.col("__bkt") * F.lit(BUCKET_SECS)
-    bend = (F.col("__bkt") + 1) * F.lit(BUCKET_SECS)
-    # one row per (site, week): lag boundary value + edge hash sets
-    tails = with_b.groupBy("site_no", "__bkt").agg(
-        F.max_by("count", secs).alias("__tail_count"),
-        F.collect_set(F.when(secs >= bend - R, F.col("__hh"))).alias("__tail_set"),
-        F.collect_set(F.when(secs < bstart + R, F.col("__hh"))).alias("__head_set"),
-    )
-    w_chain = Window.partitionBy("site_no").orderBy("__bkt")
-    chained = tails.select(
-        "site_no",
-        "__bkt",
-        F.lag("__tail_count").over(w_chain).alias("__pc_b"),
-        F.lag("__tail_set").over(w_chain).alias("__prev_tail"),
-        F.lead("__head_set").over(w_chain).alias("__next_head"),
-    )
-
-    out = (
-        with_b.withColumn("__rn", F.row_number().over(w_in))
-        .withColumn("prev_count", F.lag("count").over(w_in))
-        .withColumn("__near", near)
-        .join(F.broadcast(chained), ["site_no", "__bkt"], "left")
-        .withColumn(
-            "prev_count",
-            F.when(F.col("__rn") == 1, F.col("__pc_b")).otherwise(
-                F.col("prev_count")
-            ),
-        )
-        .withColumn(
-            "__cand",
-            (F.col("__near") >= 2)
-            | (
-                (secs < bstart + R)
-                & F.coalesce(
-                    F.array_contains("__prev_tail", F.col("__hh")), F.lit(False)
-                )
-            )
-            | (
-                (secs >= bend - R)
-                & F.coalesce(
-                    F.array_contains("__next_head", F.col("__hh")), F.lit(False)
-                )
-            ),
-        )
-        .drop("__rn", "__near", "__pc_b", "__prev_tail", "__next_head", "__bkt")
-    )
-
-    # exact confirm: the original hash-prefixed duplicate window,
-    # verbatim, over the candidate subset only (prev_count already
-    # attached; non-candidates are provably never duplicates)
-    pay = F.struct(*[F.col(c) for c in RAW_PAYLOAD])
-    dupw = Window.partitionBy("__hh", "site_no").orderBy(pay, "time")
-    prev_pay = F.lag(pay).over(dupw)
-    cand = (
-        out.where(F.col("__cand"))
-        .withColumn(
-            "__pt", F.when(prev_pay.eqNullSafe(pay), F.lag("time").over(dupw))
-        )
-        .withColumn(
-            "is_duplicate",
-            F.col("__pt").isNotNull()
-            & (F.col("__pt") >= F.col("time") - F.expr("INTERVAL 29 MINUTE")),
-        )
-        .drop("__pt")
-    )
-    rest = out.where(~F.col("__cand")).withColumn("is_duplicate", F.lit(False))
-    return cand.unionByName(rest).drop("__hh", "__cand")
+# A fused-scan level1 (one exchange plus a candidate-subset duplicate
+# confirm) was measured out and removed (LEVEL1_DUPSUBSET_AB.json).
 
 # Round-12/13 lever (LEVEL4_STAGES.json round12_clean_reprobe): the
 # level pipeline's x1000 cost after the level1 prefix lives in
@@ -567,14 +403,6 @@ def raw_to_level1(raw: DataFrame) -> DataFrame:
     (:357-360, :389 — duplicates still consume their diff), i.e. a
     plain lag over raw order including duplicate rows.
     """
-    dup_subset = (
-        _bucketed_auto(raw) if LEVEL1_DUP_SUBSET is None else LEVEL1_DUP_SUBSET
-    )
-    if dup_subset:
-        # scale shape (LEVEL1_DUP_SUBSET): prev_count + candidate
-        # screen in ONE wide exchange, exact dup confirm on the
-        # subset — subsumes the two flags below
-        return _finish_level1(_level1_fused_scan(raw))
     bucketed = (
         _bucketed_auto(raw) if LEVEL1_SEQ_BUCKETED is None else LEVEL1_SEQ_BUCKETED
     )
@@ -792,44 +620,20 @@ def level3_to_level4(
     """
     valid = level3.where(F.col("flag") == 0)
     secs = F.col("time").cast("long")
-    bucketed = (
-        _bucketed_auto(level3)
-        if LEVEL4_FRAME_BUCKETED is None
-        else LEVEL4_FRAME_BUCKETED
-    )
-
+    frame = Window.partitionBy("site_no").orderBy(secs).rangeBetween(-10801, 10801)
     # one window aggregate per column: materialize the capped frame
     # array ONCE, then fold over the column reference — an expression
     # that inlines slice(collect_list(...)) at each use point would run
     # the window aggregate 3× per column
-    def _frame_select(df, frame):
-        return df.select(
-            "time",
-            "site_no",
-            "soil_moist",
-            "effective_depth",
-            "rainfall",
-            *[c for c in ("__own", "__bkt") if c in df.columns],
-            F.slice(F.collect_list("soil_moist").over(frame), 1, 7).alias("_sm_l"),
-            F.slice(F.collect_list("effective_depth").over(frame), 1, 7).alias("_ed_l"),
-        )
-
-    if bucketed:
-        # scale shape (LEVEL4_FRAME_BUCKETED): identical ±3h frames
-        # through (site, week) groups with a ±3h halo of adjacent-
-        # bucket copies; only owner rows are emitted
-        exploded, owner = overlap_buckets(valid, "time", 10801)
-        frame = (
-            Window.partitionBy("site_no", "__bkt")
-            .orderBy(secs)
-            .rangeBetween(-10801, 10801)
-        )
-        windowed = _frame_select(exploded, frame).where(owner).drop("__own", "__bkt")
-    else:
-        frame = (
-            Window.partitionBy("site_no").orderBy(secs).rangeBetween(-10801, 10801)
-        )
-        windowed = _frame_select(valid, frame)
+    windowed = valid.select(
+        "time",
+        "site_no",
+        "soil_moist",
+        "effective_depth",
+        "rainfall",
+        F.slice(F.collect_list("soil_moist").over(frame), 1, 7).alias("_sm_l"),
+        F.slice(F.collect_list("effective_depth").over(frame), 1, 7).alias("_ed_l"),
+    )
 
     def fold_mean(arr: str, own: str) -> F.Column:
         total = F.aggregate(F.col(arr), F.lit(0.0), lambda acc, x: acc + x)
@@ -887,10 +691,11 @@ def run_pipeline_scan_local(
     LEVEL1_ZONERG_AB), and levels 2-4 are the unchanged transforms.
     Because the scan-local level1 enters through per-file kernels over
     ``spark.range`` — no file lineage for ``bucketed_auto`` to size —
-    the downstream scale gates take an explicit hint derived from the
-    sink's own bytes, the same 512 MiB crossover the file-backed gates
-    use, so level2 engages exactly the shapes it would over a
-    file-backed level1 of the same corpus."""
+    level2's scale gate (the only corpus-gated shape downstream of
+    level1) takes an explicit hint derived from the sink's own bytes,
+    the same 512 MiB crossover the file-backed gate uses, so level2
+    engages exactly the shape it would over a file-backed level1 of
+    the same corpus. Levels 3 and 4 have a single plan shape."""
     from ..operators.bucketed_window import BUCKETED_MIN_INPUT_BYTES
     from ..session import _path_bytes
 

@@ -53,40 +53,16 @@ _BKT = "__asof_bkt"
 #
 # That adoption governs the UNION as-of (asof_join_both) only — its
 # key is site_no, 8 values, the per-key sort no partition count can
-# split. The single-direction asof_join ships on user-grained keys
+# split. The single-direction asof_join runs on user-grained keys
 # (j05/j06: ~thousands of users), where partitionBy(key) is already
-# balanced and the carry's extra groupBy + join is pure overhead.
+# balanced; the bucketed shape lost there (ASOF_SINGLE_AB.json).
 ASOF_BUCKETED: bool | None = None
-
-# MEASURED OUT for the single-direction path (round 10,
-# ASOF_SINGLE_AB.json, tools/asof_single_ab.py — interleaved x100 +
-# x1000, 2 repeats, both directions, identical 40 000 138 rows): the
-# bucketed shape LOSES at every decade on the event corpus's
-# 2000-key as-of (x1000 backward 5.5 s plain vs 7.7 s bucketed,
-# forward 4.7 s vs 7.2 s; x100 ratios 0.68/0.73) — the key space is
-# already 60x the core count, so the plain window is balanced and
-# the tail-carry join only adds work. Default False keeps the plain
-# window at every corpus size; None opts into the shared corpus
-# gate and True forces (the hook for a deployment whose asof_join
-# keys are genuinely low-cardinality — identity across variants is
-# pinned by tests/test_bucketed_window.py either way).
-ASOF_SINGLE_BUCKETED: bool | None = False
 
 
 def _asof_bucketed(df) -> bool:
     from .bucketed_window import bucketed_auto
 
     return bucketed_auto(df) if ASOF_BUCKETED is None else ASOF_BUCKETED
-
-
-def _asof_single_bucketed(df) -> bool:
-    from .bucketed_window import bucketed_auto
-
-    return (
-        bucketed_auto(df)
-        if ASOF_SINGLE_BUCKETED is None
-        else ASOF_SINGLE_BUCKETED
-    )
 
 
 def asof_join(
@@ -149,58 +125,6 @@ def asof_join(
         # at equal time value rows must come first in scan order for
         # non-strict (visible), after the probe for strict (hidden)
         order = [F.col(_ORD).desc(), F.col(_SRC).asc() if not strict else F.col(_SRC).desc()]
-
-    if _asof_single_bucketed(unioned):
-        # bucketed shape (ASOF_SINGLE_BUCKETED — measured OUT as a
-        # default, forced hook only; see module comment): in-bucket
-        # running last + per-bucket tail carry. Strictness only
-        # reorders probe-vs-value ties at EQUAL time, which share a
-        # bucket by construction, so the carry (strictly earlier/later
-        # buckets) is strictness-blind.
-        from .bucketed_window import BUCKET_SECS
-
-        u = unioned.withColumn(
-            _BKT, F.floor(F.col(_ORD).cast("long") / F.lit(BUCKET_SECS)).cast("long")
-        )
-        w_in = (
-            Window.partitionBy(*on, _BKT)
-            .orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        nn = lambda c: F.when(F.col(c).isNotNull(), F.col(_ORD))  # noqa: E731
-        tail_agg = F.max_by if direction == "backward" else F.min_by
-        tails = u.groupBy(*on, _BKT).agg(
-            *[tail_agg(c, nn(c)).alias(f"__tl_{c}") for c in out_cols]
-        )
-        w_carry = (
-            Window.partitionBy(*on)
-            .orderBy(F.col(_BKT).asc() if direction == "backward" else F.col(_BKT).desc())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carries = tails.select(
-            *on,
-            _BKT,
-            *[
-                F.last(f"__tl_{c}", ignorenulls=True).over(w_carry).alias(f"__cr_{c}")
-                for c in out_cols
-            ],
-        )
-        picked_in = [
-            F.last(c, ignorenulls=True).over(w_in).alias(f"__in_{c}") for c in out_cols
-        ]
-        resolved = (
-            u.select(*left_cols, _ORD, _SRC, _BKT, *picked_in)
-            .join(F.broadcast(carries), [*on, _BKT], "left")
-            .select(
-                *left_cols,
-                _SRC,
-                *[
-                    F.coalesce(f"__in_{c}", f"__cr_{c}").alias(c)
-                    for c in out_cols
-                ],
-            )
-        )
-        return resolved.where(F.col(_SRC) == 1).drop(_SRC)
 
     frame = Window.partitionBy(*on).orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
     picked = [F.last(c, ignorenulls=True).over(frame).alias(c) for c in out_cols]

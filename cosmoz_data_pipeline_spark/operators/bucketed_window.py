@@ -22,14 +22,8 @@ The fix is the standard two-pass shape, in plain DataFrame ops:
   row its in-bucket lag. Row-for-row identical to the single-key
   window (pinned by tests/test_bucketed_window.py).
 
-- ``overlap_buckets``: the replicate-the-halo half of a bounded
-  range frame (level4's ±3h mean): each row is exploded into its own
-  bucket plus any adjacent bucket whose owner rows could need it
-  (|t - edge| < radius), the frame is evaluated per (keys, bucket)
-  over owners+halo, and only owner rows are kept. Exact for any
-  frame radius <= W - the halo covers every row a frame anchored in
-  the bucket can reach, and each source row appears exactly once per
-  anchor bucket (owner XOR halo copy).
+A replicate-the-halo shape for bounded range frames (level4's ±3h
+mean) was measured out and removed (LEVEL_FRAME_AB.json).
 
 Bucket width W: fixed 7 days. The per-(key, bucket) group is then
 cadence-bounded (504 rows at the domain's 20-min grid; ~10k at a
@@ -44,7 +38,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 BUCKET_SECS = 7 * 86400
@@ -161,42 +155,3 @@ def bucketed_lag(
         )
     return out.drop("__bkt", "__rn", *[f"__prev_{c}" for c in cols])
 
-
-def overlap_buckets(
-    df: DataFrame,
-    time_col: str,
-    radius_secs: int,
-    bucket_secs: int = BUCKET_SECS,
-) -> tuple[DataFrame, Column]:
-    """Explode ``df`` into (owner ∪ halo) rows per time bucket for a
-    centered range frame of ``radius_secs``: returns (exploded_df,
-    owner_predicate). Evaluate the frame over
-    ``Window.partitionBy(*keys, "__bkt")`` on the exploded frame and
-    keep only rows satisfying the predicate — each owner row's
-    [t-radius, t+radius] frame then sees exactly the rows the
-    unbucketed per-key frame saw, each exactly once.
-
-    Requires ``radius_secs <= bucket_secs`` (the halo only reaches
-    adjacent buckets); raises otherwise rather than silently losing
-    frame rows.
-    """
-    if radius_secs > bucket_secs:
-        raise ValueError(
-            f"radius {radius_secs}s exceeds bucket width {bucket_secs}s: "
-            "halo would need non-adjacent buckets"
-        )
-    secs = F.col(time_col).cast("long")
-    b = F.floor(secs / F.lit(bucket_secs)).cast("long")
-    # a row at t is needed by owners of bucket b-1 iff t - radius can
-    # reach below the bucket floor (t < b·W + radius), by b+1 iff
-    # t + radius reaches the next floor (t >= (b+1)·W - radius);
-    # integer seconds make both bounds exact for the inclusive frame
-    targets = F.array_compact(
-        F.array(
-            b,
-            F.when(secs < b * bucket_secs + radius_secs, b - 1),
-            F.when(secs >= (b + 1) * bucket_secs - radius_secs, b + 1),
-        )
-    )
-    exploded = df.withColumn("__own", b).withColumn("__bkt", F.explode(targets))
-    return exploded, F.col("__bkt") == F.col("__own")

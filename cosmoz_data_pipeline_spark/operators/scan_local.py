@@ -445,11 +445,14 @@ def _maybe_truncated(stat) -> bool:
     variable-length physical types are ever truncated, and only
     values whose raw length reaches the writer's truncation length
     are at risk (pyarrow 16 exposes no ``is_min_value_exact`` flag to
-    check directly). A truncated max is a prefix that sorts LOWER
-    than the real max, so site-boundary pruning on it could mis-place
-    a site's head/tail row group — the caller degrades the file to a
-    whole-file read instead. Numeric/temporal stats are never
-    truncated and always pass."""
+    check directly). parquet-mr truncates a min to a prefix, which
+    sorts at or below the real min, and a max to a prefix whose last
+    byte it increments, which sorts ABOVE the real max. Either way the
+    bound is no longer a site value, so the equality-based boundary
+    detection (adjacent row groups' min/max compared for equality)
+    could mis-place a site's head/tail row group — the caller degrades
+    the file to a whole-file read instead. Numeric/temporal stats are
+    never truncated and always pass."""
     if stat.physical_type not in ("BYTE_ARRAY", "FIXED_LEN_BYTE_ARRAY"):
         return False
     for v in (stat.min_raw, stat.max_raw):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from cosmoz_data_pipeline_spark.operators.asof import asof_join, asof_join_both
@@ -94,3 +95,44 @@ def test_both_directions_fused(spark):
     assert plan.count("Exchange") == 1
     assert plan.count("Sort [") == 2
     assert "Following" not in plan
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+@pytest.mark.parametrize("strict", [False, True])
+def test_asof_single_sparse_nulls_ties(spark, direction, strict):
+    """The single-direction as-of over value rows that leave whole
+    week-buckets empty, a null value mid-series (skipped, so the pick
+    falls through to the next non-null row) and an rt == lt tie
+    (visible unless ``strict``), checked against a brute-force pick."""
+    base = dt.datetime(2021, 1, 1)
+    probes = [(base + dt.timedelta(hours=6 * i), i) for i in range(120)]
+    left = spark.createDataFrame(
+        [("A", t, i) for t, i in probes],
+        "site_no string, time timestamp, seq int",
+    )
+    vals = [(base + dt.timedelta(days=9 * i, hours=2),
+             None if i == 3 else float(i)) for i in range(8)]
+    vals.append((base + dt.timedelta(hours=6 * 40), 999.0))  # rt == lt
+    right = spark.createDataFrame(
+        [("A", t, v) for t, v in vals], "site_no string, time timestamp, v double"
+    )
+
+    def _pick(lt):
+        if direction == "backward":
+            hit = [(rt, v) for rt, v in vals
+                   if v is not None and (rt < lt if strict else rt <= lt)]
+            return max(hit)[1] if hit else None
+        hit = [(rt, v) for rt, v in vals
+               if v is not None and (rt > lt if strict else rt >= lt)]
+        return min(hit)[1] if hit else None
+
+    got = asof_join(
+        left, right, on=["site_no"], left_time="time", right_time="time",
+        values=["v"], direction=direction, strict=strict,
+    )
+    assert sorted(tuple(r) for r in got.collect()) == [
+        ("A", t, i, _pick(t)) for t, i in probes
+    ]
+    # the tie row is visible exactly when the join is not strict
+    tie = {r["seq"]: r["v_asof"] for r in got.where("seq = 40").collect()}
+    assert (tie[40] == 999.0) is (not strict)

@@ -1,10 +1,9 @@
 """The bucketed sequence-window shapes (operators/bucketed_window.py,
-levels.LEVEL1_SEQ_BUCKETED / LEVEL4_FRAME_BUCKETED) are physical plan
-changes only: lag-1 through (key, week-bucket) groups + boundary
-exchange, and the ±3h range frame through owner+halo bucket copies,
-must produce row-for-row what the plain per-key windows produce —
-including across empty buckets, null lagged values, and frame rows
-that straddle bucket edges.
+levels.LEVEL1_SEQ_BUCKETED, asof.ASOF_BUCKETED) are physical plan
+changes only: lag-1 and the union as-of through (key, week-bucket)
+groups + boundary exchange must produce row-for-row what the plain
+per-key windows produce — including across empty buckets and null
+lagged values.
 """
 
 from __future__ import annotations
@@ -17,10 +16,7 @@ from pyspark.sql import functions as F
 
 from cosmoz_data_pipeline_spark.domain import levels
 from cosmoz_data_pipeline_spark.domain.synth import load_domain
-from cosmoz_data_pipeline_spark.operators.bucketed_window import (
-    bucketed_lag,
-    overlap_buckets,
-)
+from cosmoz_data_pipeline_spark.operators.bucketed_window import bucketed_lag
 
 
 def _rows(df):
@@ -34,20 +30,14 @@ def _rows(df):
 def seq_flags():
     from cosmoz_data_pipeline_spark.operators import asof
 
-    s1, s4, sa = (
-        levels.LEVEL1_SEQ_BUCKETED,
-        levels.LEVEL4_FRAME_BUCKETED,
-        asof.ASOF_BUCKETED,
-    )
+    s1, sa = levels.LEVEL1_SEQ_BUCKETED, asof.ASOF_BUCKETED
 
     def _set(on: bool):
         levels.LEVEL1_SEQ_BUCKETED = on
-        levels.LEVEL4_FRAME_BUCKETED = on
         asof.ASOF_BUCKETED = on
 
     yield _set
     levels.LEVEL1_SEQ_BUCKETED = s1
-    levels.LEVEL4_FRAME_BUCKETED = s4
     asof.ASOF_BUCKETED = sa
 
 
@@ -92,51 +82,6 @@ def test_bucketed_lag_tiny_buckets_every_row_a_boundary(spark):
         df, ["site_no"], "time", ["count"], ["prev_count"], bucket_secs=60
     )
     assert _rows(buck) == _rows(plain)
-
-
-def test_overlap_buckets_frame_identity(spark):
-    # rows hugging bucket edges from both sides; ±2h frame, 4h buckets
-    rows = []
-    for s in ("A", "B"):
-        for i in range(60):
-            rows.append((s, _ts(0) + dt.timedelta(minutes=17 * i), float(i)))
-    df = spark.createDataFrame(rows, "site_no string, time timestamp, v double")
-    secs = F.col("time").cast("long")
-    radius = 7200
-    plain = df.select(
-        "site_no",
-        "time",
-        F.collect_list("v")
-        .over(
-            Window.partitionBy("site_no").orderBy(secs).rangeBetween(-radius, radius)
-        )
-        .alias("fr"),
-    )
-    exploded, owner = overlap_buckets(df, "time", radius, bucket_secs=14400)
-    buck = (
-        exploded.select(
-            "site_no",
-            "time",
-            "__own",
-            "__bkt",
-            F.collect_list("v")
-            .over(
-                Window.partitionBy("site_no", "__bkt")
-                .orderBy(secs)
-                .rangeBetween(-radius, radius)
-            )
-            .alias("fr"),
-        )
-        .where(owner)
-        .drop("__own", "__bkt")
-    )
-    assert _rows(buck) == _rows(plain)
-
-
-def test_overlap_radius_beyond_bucket_raises(spark):
-    df = spark.createDataFrame([("A", _ts(0), 1.0)], "site_no string, time timestamp, v double")
-    with pytest.raises(ValueError):
-        overlap_buckets(df, "time", radius_secs=99999, bucket_secs=3600)
 
 
 def test_levels_identical_on_domain_corpus(spark, sf_dir, seq_flags):
@@ -202,19 +147,6 @@ def asof_flag():
     asof.ASOF_BUCKETED = shipped
 
 
-@pytest.fixture()
-def asof_single_flag():
-    from cosmoz_data_pipeline_spark.operators import asof
-
-    shipped = asof.ASOF_SINGLE_BUCKETED
-
-    def _set(on: bool):
-        asof.ASOF_SINGLE_BUCKETED = on
-
-    yield _set
-    asof.ASOF_SINGLE_BUCKETED = shipped
-
-
 def test_asof_both_bucketed_identity(spark, asof_flag):
     """Sparse value series across empty weeks, null values mid-series,
     and rt == lt ties in both directions (visible backward, hidden
@@ -255,39 +187,6 @@ def test_asof_both_bucketed_identity(spark, asof_flag):
     base_rows = _run()
     assert base_rows
     asof_flag(True)
-    assert _run() == base_rows
-
-
-@pytest.mark.parametrize("direction", ["backward", "forward"])
-@pytest.mark.parametrize("strict", [False, True])
-def test_asof_single_bucketed_identity(spark, asof_single_flag, direction, strict):
-    from cosmoz_data_pipeline_spark.operators.asof import asof_join
-
-    base = dt.datetime(2021, 1, 1)
-    left = spark.createDataFrame(
-        [("A", base + dt.timedelta(hours=6 * i), i) for i in range(120)],
-        "site_no string, time timestamp, seq int",
-    )
-    vals = [("A", base + dt.timedelta(days=9 * i, hours=2),
-             None if i == 3 else float(i)) for i in range(8)]
-    vals.append(("A", base + dt.timedelta(hours=6 * 40), 999.0))  # rt == lt
-    right = spark.createDataFrame(
-        vals, "site_no string, time timestamp, v double"
-    )
-
-    def _run():
-        return _rows(
-            asof_join(
-                left, right, on=["site_no"], left_time="time",
-                right_time="time", values=["v"],
-                direction=direction, strict=strict,
-            )
-        )
-
-    asof_single_flag(False)
-    base_rows = _run()
-    assert base_rows
-    asof_single_flag(True)
     assert _run() == base_rows
 
 

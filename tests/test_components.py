@@ -159,31 +159,3 @@ def test_label_propagation_matches_union_find(spark, sf_dir):
     for doc, (comp, size) in got.items():
         assert size == sizes[comp]
     spark.catalog.clearCache()
-
-
-def test_lazy_tail_checkpoint_identical_labels(spark, sf_dir):
-    # round 12 (COMPONENTS_LAZY_TAIL_CKPT): lazy checkpoints on
-    # skip-probe rounds change materialization timing, never values —
-    # the tiny corpus keeps every frontier below
-    # COMPONENTS_PROBE_LAZY_BELOW, so the lazy branch actually runs
-    from cosmoz_data_pipeline_spark.plans import REGISTRY, catalog_ext as CE
-    from cosmoz_data_pipeline_spark.plans.registry import release_persists
-
-    shipped = CE.COMPONENTS_LAZY_TAIL_CKPT
-
-    def run():
-        rows = sorted(
-            tuple(r)
-            for r in REGISTRY["x_dedup_components"].run(spark, sf_dir).collect()
-        )
-        release_persists()
-        return rows
-
-    try:
-        CE.COMPONENTS_LAZY_TAIL_CKPT = False
-        base = run()
-        assert base
-        CE.COMPONENTS_LAZY_TAIL_CKPT = True
-        assert run() == base
-    finally:
-        CE.COMPONENTS_LAZY_TAIL_CKPT = shipped

@@ -11,11 +11,14 @@ collisions are separated by the struct sort and fail the equality.
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 
 import pytest
+from pyspark.sql import functions as F
 
 from cosmoz_data_pipeline_spark.domain import levels
 from cosmoz_data_pipeline_spark.domain.synth import load_domain
+from cosmoz_data_pipeline_spark.operators.bucketed_window import BUCKET_SECS
 
 
 @pytest.fixture()
@@ -29,6 +32,17 @@ def dupw_hash():
     levels.LEVEL1_DUPW_HASH = shipped
 
 
+@pytest.fixture()
+def seq_bucketed():
+    shipped = levels.LEVEL1_SEQ_BUCKETED
+
+    def _set(on: bool):
+        levels.LEVEL1_SEQ_BUCKETED = on
+
+    yield _set
+    levels.LEVEL1_SEQ_BUCKETED = shipped
+
+
 def _l1_rows(spark, raw):
     out = levels.raw_to_level1(raw)
     return sorted(
@@ -37,12 +51,16 @@ def _l1_rows(spark, raw):
     )
 
 
-def test_identical_on_domain_corpus(spark, sf_dir, dupw_hash):
+def test_identical_on_domain_corpus(spark, sf_dir, dupw_hash, seq_bucketed):
     raw = load_domain(spark, sf_dir)["raw_values"]
+    seq_bucketed(False)
     dupw_hash(False)
     base = _l1_rows(spark, raw)
     assert base
     dupw_hash(True)
+    assert _l1_rows(spark, raw) == base
+    # and the at-scale shape: bucketed lag + hash window together
+    seq_bucketed(True)
     assert _l1_rows(spark, raw) == base
 
 
@@ -102,3 +120,87 @@ def test_identical_with_null_payload_fields(spark, dupw_hash):
     # null-battery group), minute 60 dropped (5-min dup of 55)
     time_idx = sorted(levels.raw_to_level1(raw).columns).index("time")
     assert sorted(t[time_idx].minute for t in base) == [45, 50, 55]
+
+
+def test_bucket_edges_and_chains(spark, dupw_hash, seq_bucketed):
+    """Adversarial grid under every LEVEL1_SEQ_BUCKETED x
+    LEVEL1_DUPW_HASH shape: duplicates straddling a week-bucket edge
+    in both directions, a >29-min same-payload pair, an equal-payload
+    chain, an equal-time pair, and a same-count row that differs in
+    another payload field."""
+    b = 3 * BUCKET_SECS  # an arbitrary bucket boundary (epoch secs)
+    rows = []
+
+    def add(t, site, count, battery=12.0, tag=1.0):
+        rows.append((t, site, 0, count, battery, tag))
+
+    # same-payload pair straddling the boundary, 20 min apart -> dup
+    add(b - 600, 1, 1500), add(b + 600, 1, 1500)
+    # same payload, 40 min apart across the boundary -> kept
+    add(b - 1200, 2, 1600), add(b + 1200, 2, 1600)
+    # row just BEFORE the boundary whose duplicate is after it
+    add(b - 60, 3, 1700), add(b + 900, 3, 1700)
+    # in-bucket chain: t, +20m, +40m (each consecutive gap <=29m)
+    add(b + 7200, 4, 1800), add(b + 8400, 4, 1800), add(b + 9600, 4, 1800)
+    # equal-time same-payload pair
+    add(b + 20000, 5, 1900), add(b + 20000, 5, 1900)
+    # same count, different battery -> NOT a duplicate
+    add(b + 30000, 6, 2000, battery=11.0), add(b + 31200, 6, 2000, battery=12.5)
+    # sequence context rows so prev_count is non-null for the cases
+    for t, s in ((b - 3000, 1), (b - 3600, 2), (b - 2400, 3), (b + 6000, 4),
+                 (b + 18000, 5), (b + 28000, 6)):
+        add(t, s, 1000 + s)
+
+    raw = spark.createDataFrame(
+        rows, "secs long, site_no int, flag int, count long, battery double, vwc1 double"
+    ).select(
+        F.col("secs").cast("timestamp").alias("time"),
+        "site_no",
+        "flag",
+        "count",
+        F.lit(950.0).alias("pressure1"),
+        F.lit(21.0).alias("internal_temperature"),
+        F.lit(31.0).alias("internal_humidity"),
+        "battery",
+        F.lit(16.0).alias("tube_temperature"),
+        F.lit(21.0).alias("tube_humidity"),
+        F.lit(0.0).alias("rain"),
+        "vwc1",
+        F.lit(1.0).alias("vwc2"),
+        F.lit(1.0).alias("vwc3"),
+        F.lit(949.0).alias("pressure2"),
+        F.lit(10.0).alias("external_temperature"),
+        F.lit(50.0).alias("external_humidity"),
+    )
+
+    base = None
+    for seq, hashed in itertools.product((False, True), repeat=2):
+        seq_bucketed(seq)
+        dupw_hash(hashed)
+        got = _l1_rows(spark, raw)
+        if base is None:
+            base = got
+        assert got == base, (seq, hashed)
+        # the specific kept/dropped (site, epoch-sec) outcomes, not
+        # just "something dropped"
+        kept = [
+            (r["s"], r["t"])
+            for r in levels.raw_to_level1(raw)
+            .select(F.col("site_no").alias("s"), F.unix_timestamp("time").alias("t"))
+            .collect()
+        ]
+        kept_set = set(kept)
+        assert len(kept) == len(kept_set)  # equal-time dup pair collapsed
+        # 20-min straddler: first kept, duplicate dropped
+        assert (1, b - 600) in kept_set and (1, b + 600) not in kept_set
+        # 40-min same-payload pair: both kept (outside the 29-min window)
+        assert (2, b - 1200) in kept_set and (2, b + 1200) in kept_set
+        # 16-min straddler: duplicate after the boundary dropped
+        assert (3, b - 60) in kept_set and (3, b + 900) not in kept_set
+        # chain reduced to its head
+        assert (4, b + 7200) in kept_set
+        assert (4, b + 8400) not in kept_set and (4, b + 9600) not in kept_set
+        # equal-time pair: exactly one survivor
+        assert (5, b + 20000) in kept_set
+        # same count but different battery: NOT duplicates, both kept
+        assert (6, b + 30000) in kept_set and (6, b + 31200) in kept_set

@@ -106,66 +106,3 @@ def test_query_output_identical_with_kernel(spark, sf_dir, sig_kernel, name):
     assert base, "corpus must produce rows for this test to bite"
     sig_kernel(True)
     assert run() == base
-
-
-@pytest.fixture()
-def hash_where():
-    """Force where the kernel's per-shingle md5 runs (round 12,
-    MINHASH_HASH_WHERE), restoring the shipped default."""
-    shipped = CE.MINHASH_HASH_WHERE
-
-    def _set(v: str):
-        CE.MINHASH_HASH_WHERE = v
-
-    yield _set
-    CE.MINHASH_HASH_WHERE = shipped
-
-
-@pytest.mark.parametrize("with_set", [False, True])
-def test_jvm_hash_kernel_matches_python_and_fold(
-    spark, edge_docs, hash_where, with_set
-):
-    # round 12 (VERDICT r11 next #6): moving the md5 prefix JVM-side
-    # (kernel emits shingle strings; hashing + 12 affine minima are
-    # codegen expressions) must leave signatures and sets identical to
-    # BOTH the Python-hash kernel and the fold
-    fold = {r["doc_id"]: r for r in _fold_per_doc(edge_docs, with_set).collect()}
-    outs = {}
-    for v in ("python", "jvm"):
-        hash_where(v)
-        outs[v] = {
-            r["doc_id"]: r
-            for r in CE._minhash_sigs_kernel(edge_docs, with_set=with_set).collect()
-        }
-    assert set(fold) == set(outs["python"]) == set(outs["jvm"])
-    for did, fr in fold.items():
-        assert (
-            list(fr["sig"])
-            == list(outs["python"][did]["sig"])
-            == list(outs["jvm"][did]["sig"])
-        ), did
-        if with_set:
-            assert (
-                set(fr["sh_set"])
-                == set(outs["python"][did]["sh_set"])
-                == set(outs["jvm"][did]["sh_set"])
-            ), did
-
-
-@pytest.mark.parametrize(
-    "name", ["x_dedup_minhash_lsh", "x_dedup_ngram_jaccard"]
-)
-def test_query_output_identical_across_hash_where(
-    spark, sf_dir, sig_kernel, hash_where, name
-):
-    def run():
-        rows = _rows(REGISTRY[name].run(spark, sf_dir))
-        release_persists()
-        return rows
-
-    sig_kernel(True)
-    hash_where("python")
-    base = run()
-    assert base
-    hash_where("jvm")
-    assert run() == base

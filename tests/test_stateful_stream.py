@@ -140,15 +140,15 @@ def test_checkpoint_resume_processes_only_new_files(spark, sf_dir, tmp_path):
     assert got[base + dt.timedelta(hours=3)] == (True, 110.0)
 
 
-def test_stream_dedup_state_partitions_sized_from_bytes(spark, sf_dir, tmp_path):
+def test_stream_dedup_state_partitions_sized_from_bytes(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """Round 15 (ST6_STAGES/ST6_STATEPARTS_AB): the dedup stream's
     state-store partition count derives from source BYTES (one
     target-sized slice per partition, min 8), not the session's
     core-count floor; results are partition-count-invariant; and the
     session conf is restored after the stream."""
-    from cosmoz_data_pipeline_spark.session import (
-        SHUFFLE_TARGET_INPUT_BYTES,
-    )
+    from cosmoz_data_pipeline_spark import session
     from cosmoz_data_pipeline_spark.streaming import incremental as inc
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
@@ -165,13 +165,23 @@ def test_stream_dedup_state_partitions_sized_from_bytes(spark, sf_dir, tmp_path)
         assert inc._state_partitions(spark, src) == 17
     finally:
         inc.STREAM_STATE_PARTITIONS = prev_flag
-    sz = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(src)
-        for f in fs
+    # bytes-derived branch on the real source: a target of 1/20 of its
+    # bytes gives bytes // target partitions, above the floor
+    sz = session._path_bytes(src, spark)
+    target = sz // 20
+    monkeypatch.setattr(session, "SHUFFLE_TARGET_INPUT_BYTES", target)
+    assert inc._state_partitions(spark, src) == sz // target >= 20
+    # a source past cap * target clamps to SHUFFLE_PARTITIONS_CAP
+    monkeypatch.setattr(
+        session, "_path_bytes", lambda path, spark=None: 10**6 * target
     )
-    want_big = max(8, sz * 100 // SHUFFLE_TARGET_INPUT_BYTES)
-    assert want_big == 8 or want_big > 8  # rule is monotone in bytes
+    assert inc._state_partitions(spark, src) == session.SHUFFLE_PARTITIONS_CAP
+    monkeypatch.setattr(session, "SHUFFLE_PARTITIONS_CAP", 50)
+    assert inc._state_partitions(spark, src) == 50
+    # and a cap below the floor never shrinks the count under 8
+    monkeypatch.setattr(session, "SHUFFLE_PARTITIONS_CAP", 3)
+    assert inc._state_partitions(spark, src) == 8
+    monkeypatch.undo()
 
     # end-to-end: same deduped key set at the auto count and at a
     # pinned high count, and the session conf is untouched after

@@ -112,40 +112,3 @@ def test_query_output_identical_with_kernel(spark, sf_dir, kernel_flags, name, f
     assert base, "corpus must produce rows for this test to bite"
     kernel_flags(**{flag: True})
     assert run() == base
-
-
-def test_decon_kernel_jvm_hash_matches_python(spark, edge_docs):
-    # round 12 (VERDICT r11 next #6): DECON_HASH_WHERE="jvm" moves the
-    # gram md5 JVM-side; the per-doc int hash sets must be identical
-    shipped = CE.DECON_HASH_WHERE
-    try:
-        CE.DECON_HASH_WHERE = "python"
-        py = {r["doc_id"]: set(r["hs"]) for r in CE._decon_gram_sets_kernel(edge_docs).collect()}
-        CE.DECON_HASH_WHERE = "jvm"
-        jvm = {r["doc_id"]: set(r["hs"]) for r in CE._decon_gram_sets_kernel(edge_docs).collect()}
-    finally:
-        CE.DECON_HASH_WHERE = shipped
-    assert py == jvm
-    assert py  # the edge corpus must produce >= 1 gram set
-
-
-def test_decontaminate_identical_across_hash_where(spark, sf_dir):
-    from cosmoz_data_pipeline_spark.plans import REGISTRY
-    from cosmoz_data_pipeline_spark.plans.registry import release_persists
-
-    shipped = (CE.DECON_GRAM_KERNEL, CE.DECON_HASH_WHERE)
-
-    def run():
-        rows = sorted(tuple(r) for r in REGISTRY["x_decontaminate"].run(spark, sf_dir).collect())
-        release_persists()
-        return rows
-
-    try:
-        CE.DECON_GRAM_KERNEL = True
-        CE.DECON_HASH_WHERE = "python"
-        base = run()
-        assert base
-        CE.DECON_HASH_WHERE = "jvm"
-        assert run() == base
-    finally:
-        CE.DECON_GRAM_KERNEL, CE.DECON_HASH_WHERE = shipped

@@ -44,29 +44,24 @@ def _walk(obj, path=""):
         return isinstance(v, (int, float)) and not isinstance(v, bool)
 
     if isinstance(obj, dict):
+        # a key is consumed only when its value was taken as a numeric
+        # sample: a container under the other key of a pair is still
+        # walked
         consumed: set[str] = set()
-        if _num(obj.get("pre")) or _num(obj.get("post")):
-            yield (
-                path,
-                obj.get("pre") if _num(obj.get("pre")) else None,
-                obj.get("post") if _num(obj.get("post")) else None,
-            )
-            consumed |= {"pre", "post"}
-        if _num(obj.get("io_sentinel_pre_sec")) or _num(
-            obj.get("io_sentinel_post_sec")
+        for pre_k, post_k in (
+            ("pre", "post"),
+            ("io_sentinel_pre_sec", "io_sentinel_post_sec"),
         ):
-            yield (
-                path,
-                obj.get("io_sentinel_pre_sec")
-                if _num(obj.get("io_sentinel_pre_sec"))
-                else None,
-                obj.get("io_sentinel_post_sec")
-                if _num(obj.get("io_sentinel_post_sec"))
-                else None,
-            )
-            consumed |= {"io_sentinel_pre_sec", "io_sentinel_post_sec"}
+            taken = [k for k in (pre_k, post_k) if _num(obj.get(k))]
+            if taken:
+                yield (
+                    path,
+                    obj[pre_k] if pre_k in taken else None,
+                    obj[post_k] if post_k in taken else None,
+                )
+                consumed.update(taken)
         for k, v in obj.items():
-            if k in consumed:  # only skip keys actually taken as samples
+            if k in consumed:
                 continue
             yield from _walk(v, f"{path}/{k}" if path else k)
 

@@ -1,7 +1,7 @@
 """Interleaved A/B for the bucketed per-site sequence windows
-(domain/levels.LEVEL1_SEQ_BUCKETED / LEVEL4_FRAME_BUCKETED, both
-forced together): times the raw->level1 prefix AND the full level4
-pipeline with the plain per-site windows against the
+(domain/levels.LEVEL1_SEQ_BUCKETED, or with --asof-only
+operators/asof.ASOF_BUCKETED): times the raw->level1 prefix AND the
+full level4 pipeline with the plain per-site windows against the
 (site, week-bucket) + boundary-exchange shapes in ONE session,
 alternating variants per repeat so host drift cancels.
 
@@ -20,8 +20,10 @@ would prune level4's collect_list windows and, policy aside, the A/B
 must compare the work the variants actually differ on).
 
 Usage: python tools/level_bucketed_ab.py [dir:mult ...] [--repeats N]
+                                         [--asof-only]
   default corpora: x100 and x1000.
-Writes LEVEL_BUCKETED_AB.json at the repo root.
+Writes LEVEL_BUCKETED_AB.json (LEVEL_ASOF_AB.json with --asof-only)
+at the repo root.
 """
 
 from __future__ import annotations
@@ -47,11 +49,8 @@ VARIANTS = (("plain", False), ("bucketed", True))
 STAGES = ("level1", "level4")
 
 
-FRAME_ONLY = False  # --frame-only: isolate LEVEL4_FRAME_BUCKETED
-# (seq bucketing held ON) so the frame halo's own cost is adjudicated
-# separately from the level1 win it rides on
-ASOF_ONLY = False  # --asof-only: isolate asof.ASOF_BUCKETED (seq ON,
-# frame at its shipped default) on the level2/level4 prefixes
+ASOF_ONLY = False  # --asof-only: isolate asof.ASOF_BUCKETED (seq ON)
+# on the level2/level4 prefixes
 
 
 def _one(spark, sf_dir: str, stage: str, bucketed: bool, count_rows: bool):
@@ -61,8 +60,7 @@ def _one(spark, sf_dir: str, stage: str, bucketed: bool, count_rows: bool):
         levels.LEVEL1_SEQ_BUCKETED = True
         asof.ASOF_BUCKETED = bucketed
     else:
-        levels.LEVEL1_SEQ_BUCKETED = True if FRAME_ONLY else bucketed
-        levels.LEVEL4_FRAME_BUCKETED = bucketed
+        levels.LEVEL1_SEQ_BUCKETED = bucketed
         asof.ASOF_BUCKETED = False
     _cold(spark)
     d = load_domain(spark, sf_dir)
@@ -83,11 +81,8 @@ def _one(spark, sf_dir: str, stage: str, bucketed: bool, count_rows: bool):
 
 
 def main() -> None:
-    global FRAME_ONLY, ASOF_ONLY
+    global ASOF_ONLY
     args = sys.argv[1:]
-    if "--frame-only" in args:
-        FRAME_ONLY = True
-        args.remove("--frame-only")
     if "--asof-only" in args:
         ASOF_ONLY = True
         args.remove("--asof-only")
@@ -104,25 +99,17 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "64g")
     from cosmoz_data_pipeline_spark.operators import asof
 
-    s1, s4 = levels.LEVEL1_SEQ_BUCKETED, levels.LEVEL4_FRAME_BUCKETED
-    sa = asof.ASOF_BUCKETED
+    s1, sa = levels.LEVEL1_SEQ_BUCKETED, asof.ASOF_BUCKETED
     spark = build_session(
         app_name="level-bucketed-ab", extra_conf={"spark.ui.enabled": "true"}
     )
     spark.sparkContext.setLogLevel("ERROR")
-    stages = (
-        ("level2", "level4")
-        if ASOF_ONLY
-        else ("level4",)
-        if FRAME_ONLY
-        else STAGES
-    )
+    stages = ("level2", "level4") if ASOF_ONLY else STAGES
     out = {"metric": "level_bucketed_ab"
-           + ("_frame_only" if FRAME_ONLY else "")
            + ("_asof_only" if ASOF_ONLY else ""),
            "unit": "sec", "repeats": repeats,
            "stages": list(stages),
-           "frame_only": FRAME_ONLY, "asof_only": ASOF_ONLY,
+           "asof_only": ASOF_ONLY,
            "shipped_variant": "auto (None = corpus-gated)"
            if s1 is None else ("bucketed" if s1 else "plain"),
            "corpora": {}}
@@ -159,15 +146,10 @@ def main() -> None:
                 )
                 out["corpora"][f"x{mult}:{stage}"] = rec
     finally:
-        levels.LEVEL1_SEQ_BUCKETED, levels.LEVEL4_FRAME_BUCKETED = s1, s4
-        asof.ASOF_BUCKETED = sa
+        levels.LEVEL1_SEQ_BUCKETED, asof.ASOF_BUCKETED = s1, sa
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "LEVEL_ASOF_AB.json"
-        if ASOF_ONLY
-        else "LEVEL_FRAME_AB.json"
-        if FRAME_ONLY
-        else "LEVEL_BUCKETED_AB.json",
+        "LEVEL_ASOF_AB.json" if ASOF_ONLY else "LEVEL_BUCKETED_AB.json",
     )
     with open(path, "w") as f:
         json.dump(out, f, indent=1)

@@ -4,7 +4,7 @@ x_embed_cosine_neardup with no screen (every candidate pair goes
 straight to the exact full-vector verify join) against head-H
 Cauchy-Schwarz screens (H = 8, 16) in ONE session, alternating
 variants per repeat so host drift cancels (the protocol of
-tools/neardup_shj_ab.py / bench_ab.py).
+tools/bench_ab.py).
 
 Round-9 verdict (NEARDUP_PRESCREEN_AB.json): head16 WON at both
 decades — best-of-2, identical 617 874 output rows per variant:
